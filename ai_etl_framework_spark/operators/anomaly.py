@@ -213,7 +213,9 @@ class AnomalySplitter:
 
     Reference: src/transformers/routing/anomaly_splitter.py:17-126.
     Cache the parent once, then two cheap filters — the reference's
-    buffer-then-write-at-cleanup becomes a second write action.
+    buffer-then-write-at-cleanup becomes a second write action. The
+    cached input is the caller's to release; a ``Pipeline`` run
+    releases it when the run ends.
     """
 
     def __init__(self, quarantine_path: str, flag_col: str = "_meta_is_anomaly",
@@ -230,14 +232,6 @@ class AnomalySplitter:
             writer.option("header", True).csv(self.quarantine_path)
         else:
             writer.parquet(self.quarantine_path)
-        # cache lifecycle: the blocks (materialized by the quarantine
-        # write) must survive until the CLEAN side's first action —
-        # there is no post-consumption hook on a lazy result, so like
-        # every other shared-frame persist in this repo the release is
-        # Spark's storage LRU. A long-lived service calling the
-        # splitter repeatedly relies on that eviction; callers that
-        # want deterministic release can run their action and then
-        # ``df.unpersist()`` the INPUT frame themselves.
         return df.filter(~F.coalesce(F.col(self.flag_col), F.lit(False)))
 
 

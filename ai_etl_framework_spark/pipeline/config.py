@@ -54,19 +54,6 @@ def build_source(spark: SparkSession, cfg: dict[str, Any]) -> DataFrame:
     raise ConfigurationError(f"unknown source type: {kind!r}")
 
 
-def _type_converter(cfg: dict[str, Any]) -> Callable[[DataFrame], DataFrame]:
-    casts = cfg.get("casts", {})
-
-    def convert(df: DataFrame) -> DataFrame:
-        out = df
-        for col, t in casts.items():
-            if col in out.columns:
-                out = out.withColumn(col, F.col(col).try_cast(t))
-        return out
-
-    return convert
-
-
 def _dashboard_rollups(cfg: dict[str, Any]) -> Callable[[DataFrame], DataFrame]:
     out_dir = cfg["output_dir"]
 
@@ -232,7 +219,9 @@ TRANSFORMER_FACTORIES: dict[str, Callable[[dict], Callable[[DataFrame], DataFram
     "metadata_to_columns": lambda cfg: MetadataToColumns(**cfg),
     "dashboard_aggregator": _dashboard_rollups,
     # declared-but-unimplemented in the reference; implemented here
-    "type_converter": _type_converter,
+    "type_converter": lambda cfg: (
+        lambda df: writers.coerce_types(df, cfg.get("casts", {}))
+    ),
     "custom": lambda cfg: cfg["fn"],
     # training-corpus operator suite (beyond-reference)
     **_corpus_factories(),

@@ -7,9 +7,20 @@ The reference fully materialized every stage in driver memory
 (pipeline_core.py:49). Here the pipeline is ONE lazy DataFrame chain:
 transformers are DataFrame → DataFrame callables, Catalyst fuses the
 narrow ones into a single stage, and nothing materializes until the
-load actions. Multi-destination runs cache the final frame once
-(ref pipeline_core.py:82-134 per-sink transactions → per-sink write
-actions under Spark's job commit).
+load actions. A run caches the final frame once, counts it, then
+writes every destination from that cache (ref pipeline_core.py:82-134
+per-sink transactions → per-sink write actions under Spark's job
+commit).
+
+A run owns and releases its caches, as the reference's run calls
+``cleanup()`` on each transformer and clears its cache afterwards
+(SURVEY §3.1, steps 3 and 5): every transformer input whose cache
+flag flipped while that transformer ran (the anomaly splitter's) and
+the final frame are unpersisted when the run ends, even when it
+fails. Nothing stays behind for Spark's cache lookup to match to the
+next run over the same path after its files changed.
+``dataframe()`` is the lazy view instead: its caller owns whatever
+the chain cached.
 
 Staged mode (extract-only / transform-only / load-only crossing
 process lifetimes, ref pipeline.py:345-475) persists checkpoint
@@ -20,8 +31,9 @@ from __future__ import annotations
 
 import os
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Callable, Optional
+from typing import Callable, Iterator, Optional
 
 from pyspark.sql import DataFrame
 
@@ -56,41 +68,68 @@ class Pipeline:
 
     def dataframe(self) -> DataFrame:
         """The composed lazy plan (the IR — ref's three lists become
-        one logical plan Catalyst can optimize across)."""
+        one logical plan Catalyst can optimize across). Frames the
+        chain caches stay cached: the caller owns them."""
+        return self._apply(self._require_source(), [])
+
+    def _require_source(self) -> DataFrame:
         if self._source is None:
             raise ValueError("no source; call extract() first")
-        df = self._source
-        for t in self._transformers:  # user order preserved (ref :44-51)
-            df = t(df)
+        return self._source
+
+    def _apply(self, df: DataFrame, cached: list[DataFrame]) -> DataFrame:
+        """Apply the transformers in user order (ref :44-51), adding
+        to ``cached`` each input a transformer cached."""
+        for t in self._transformers:
+            was_cached = df.is_cached
+            try:
+                out = t(df)
+            finally:  # a step that fails after caching still leaves it
+                if df.is_cached and not was_cached:
+                    cached.append(df)
+            df = out
         return df
+
+    @contextmanager
+    def _chain(self, df: DataFrame, cache_result: bool = False) -> Iterator[DataFrame]:
+        """The chain over ``df``; every frame it cached, and with
+        ``cache_result`` the result itself, is unpersisted on exit."""
+        cached: list[DataFrame] = []
+        try:
+            df = self._apply(df, cached)
+            if cache_result and not df.is_cached:
+                cached.append(df.cache())
+            yield df
+        finally:
+            # newest first: a frame built over an older cached frame
+            # goes before it, so no dependent cache gets re-planned
+            for frame in reversed(cached):
+                frame.unpersist()
+
+    def _load(self, df: DataFrame) -> int:
+        count = df.count()
+        for load in self._loads:
+            load(df)
+        return count
 
     def run(self) -> PipelineResult:
         durations: dict[str, float] = {}
-        errors: list[str] = []
         t0 = time.perf_counter()
         try:
-            df = self.dataframe()
-            durations["plan"] = time.perf_counter() - t0
-
-            t1 = time.perf_counter()
-            # cache for ANY destination count: records_loaded comes
-            # from count() before the writes, so without the cache a
-            # single-destination run executes the whole transform
+            # cache the result for ANY destination count: records_loaded
+            # comes from count() before the writes, so without the cache
+            # a single-destination run executes the whole transform
             # chain twice — and a nondeterministic step (sampling,
             # salting) could make the reported count differ from the
             # rows actually written
-            df = df.cache()
-            try:
-                count = df.count()
-                for load in self._loads:
-                    load(df)
-            finally:
-                df.unpersist()
+            with self._chain(self._require_source(), cache_result=True) as df:
+                durations["plan"] = time.perf_counter() - t0
+                t1 = time.perf_counter()
+                count = self._load(df)
             durations["execute"] = time.perf_counter() - t1
-            return PipelineResult(True, count, durations, errors)
+            return PipelineResult(True, count, durations)
         except Exception as e:  # noqa: BLE001 — mirrors ref's error list
-            errors.append(str(e))
-            return PipelineResult(False, 0, durations, errors)
+            return PipelineResult(False, 0, durations, [str(e)])
 
     # -- staged mode (ref pipeline.py:345-475) --------------------------
 
@@ -101,33 +140,16 @@ class Pipeline:
 
     def run_extract_only(self) -> str:
         path = self._ckpt("extracted")
-        self.dataframe_source().write.mode("overwrite").parquet(path)
+        self._require_source().write.mode("overwrite").parquet(path)
         return path
 
-    def dataframe_source(self) -> DataFrame:
-        if self._source is None:
-            raise ValueError("no source")
-        return self._source
-
     def run_transform_only(self) -> str:
-        spark = self._source.sparkSession if self._source is not None else None
-        df = (
-            spark.read.parquet(self._ckpt("extracted"))
-            if spark is not None
-            else self.dataframe_source()
-        )
-        for t in self._transformers:
-            df = t(df)
+        spark = self._require_source().sparkSession
         path = self._ckpt("transformed")
-        df.write.mode("overwrite").parquet(path)
+        with self._chain(spark.read.parquet(self._ckpt("extracted"))) as df:
+            df.write.mode("overwrite").parquet(path)
         return path
 
     def run_load_only(self) -> PipelineResult:
-        if self._source is None:
-            raise ValueError("no source session")
-        spark = self._source.sparkSession
-        df = spark.read.parquet(self._ckpt("transformed"))
-        count = df.count()
-        for load in self._loads:
-            load(df)
-        return PipelineResult(True, count)
+        spark = self._require_source().sparkSession
+        return PipelineResult(True, self._load(spark.read.parquet(self._ckpt("transformed"))))

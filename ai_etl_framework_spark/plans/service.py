@@ -17,9 +17,9 @@ on invalidation. All query endpoints
 Scale note: the cache holds the *DataFrame handle* (a logical plan),
 not data — ``.cache()`` materializes lazily per partition on first
 action and is the direct replacement for DuckDB's per-connection
-view. On a cluster the cache is distributed across executors; at
-100 TB you would flip ``cache_data=False`` and rely on parquet scans
-+ AQE, which this facade exposes as a constructor knob.
+view. On a cluster the cache is distributed across executors, and
+a gold frame larger than executor memory spills to local disk
+(``cache()`` is MEMORY_AND_DISK), so the facade always caches.
 
 The HTTP layer is optional: ``create_app`` builds the same routes as
 the reference's FastAPI service when fastapi is importable, and
@@ -45,10 +45,9 @@ class DashboardService:
     """Per-``{org}/{source}`` cached-DataFrame registry + the four
     dashboard query operations (ref duckdb_service.py:56-113)."""
 
-    def __init__(self, spark: SparkSession, base_dir: str, cache_data: bool = True):
+    def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base_dir = base_dir
-        self.cache_data = cache_data
         self._cache: dict[tuple[str, str], DataFrame] = {}
         # entry-point-C stores (r12): latest insight / visualization
         # payload per (org, source) — the engine-side stand-in for the
@@ -76,8 +75,7 @@ class DashboardService:
             df = self.spark.read.csv(csv, header=True, inferSchema=True)
         else:
             raise ReadError(f"no gold data for {org}/{source}: {pq}")
-        if self.cache_data:
-            df = df.cache()
+        df = df.cache()
         self._cache[key] = df
         return df
 
@@ -88,9 +86,7 @@ class DashboardService:
         org_slug = slugify(org)
         for key in [k for k in self._cache if k[0] == org_slug]:
             if source is None or key[1] == slugify(source):
-                df = self._cache.pop(key)
-                if self.cache_data:
-                    df.unpersist()
+                self._cache.pop(key).unpersist()
 
     # -- endpoints ---------------------------------------------------
 

@@ -212,20 +212,3 @@ def write_bucketed(
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
 
-
-def fan_out(df: DataFrame, writes: Sequence[dict]) -> None:
-    """Multi-destination fan-out (ref pipeline_core.py:82-134; unified
-    API always writes parquet + csv, main.py:146-149): cache once,
-    then one action per sink."""
-    df = df.cache()
-    try:
-        for spec in writes:
-            # read, don't pop: the caller's spec dicts must survive a
-            # retry (or a second fan-out of the same spec list) intact
-            kind = spec["kind"]
-            kwargs = {k: v for k, v in spec.items() if k != "kind"}
-            {"parquet": write_parquet, "csv": write_csv, "json": write_json, "jdbc": write_jdbc}[
-                kind
-            ](df, **kwargs)
-    finally:
-        df.unpersist()

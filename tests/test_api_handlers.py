@@ -126,6 +126,53 @@ def test_quarantine_path_injected_for_anomaly_splitter(svc, sf_dir):
     assert "/acme-corp/quarantine/orders-feed_anomalies.csv" in outs["quarantine_path"]
 
 
+SPLIT_CHAIN = [
+    {"type": "anomaly_detector", "method": "statistical", "threshold": 3.0},
+    {"type": "anomaly_splitter"},
+]
+
+
+def _cached_rdds(spark):
+    return list(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+
+def _write_bronze(path, tag, ids):
+    rows = "".join(f"{i},{tag},{10.0 + i % 7}\n" for i in ids)
+    path.write_text("id,tag,amount\n" + rows)
+
+
+def test_unified_rerun_reads_replaced_bronze_and_releases_caches(svc, spark, tmp_path):
+    """A run releases every frame it cached, the splitter's input
+    included. Left cached, that frame matched the next run's plan over
+    the same bronze path, so the rerun wrote the previous batch's gold
+    although a file under the path had been replaced."""
+    spark.catalog.clearCache()  # the session is shared across tests
+    bronze = tmp_path / "bronze"
+    bronze.mkdir()
+    _write_bronze(bronze / "base.csv", "base", range(200))
+    _write_bronze(bronze / "batch_a.csv", "a", range(1000, 1030))
+    cfg = _config("", source={"type": "csv", "path": str(bronze)},
+                  transformers=SPLIT_CHAIN)
+
+    def gold_tags():
+        resp = svc.run_unified(cfg)
+        assert resp["status"] == "completed", resp["message"]
+        assert _cached_rdds(spark) == []
+        gold = spark.read.parquet(resp["metadata"]["outputs"]["bi_path"])
+        return {r["tag"]: r["count"] for r in gold.groupBy("tag").count().collect()}
+
+    assert gold_tags() == {"base": 200, "a": 30}
+    (bronze / "batch_a.csv").unlink()
+    _write_bronze(bronze / "batch_b.csv", "b", range(2000, 2040))
+    assert gold_tags() == {"base": 200, "b": 40}
+
+    staged = svc.init_staged(cfg)["pipeline_id"]
+    assert svc.run_extract(staged)["status"] == "completed"
+    tr = svc.run_transform(staged)
+    assert tr["status"] == "completed" and tr["records"] == 240
+    assert _cached_rdds(spark) == []
+
+
 def test_bronze_upload_and_list(svc):
     """Bronze file management (r12, ref main.py:1550/1609): upload
     lands under {base}/{org-slug}/bronze, traversal is stripped, the

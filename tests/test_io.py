@@ -1,5 +1,5 @@
 """Sources/sinks: CSV/JSON readers (modes, json_path, corrupt
-records), writers (ordering, coercion, partitioning, fan-out),
+records), writers (ordering, coercion, partitioning),
 incremental manifest, row-id stamping, medallion paths."""
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from ai_etl_framework_spark.sinks.writers import (
     coerce_types,
-    fan_out,
     ordered_columns,
     write_csv,
     write_json,
@@ -184,18 +183,6 @@ def test_write_json_lines(spark, small, tmp_path):
     assert len(rows) == 3
 
 
-def test_fan_out_two_sinks(spark, small, tmp_path):
-    fan_out(
-        small,
-        [
-            {"kind": "parquet", "path": str(tmp_path / "bi")},
-            {"kind": "csv", "path": str(tmp_path / "rag"), "single_file": True},
-        ],
-    )
-    assert spark.read.parquet(str(tmp_path / "bi")).count() == 3
-    assert spark.read.option("header", True).csv(str(tmp_path / "rag")).count() == 3
-
-
 # -- incremental manifest ---------------------------------------------
 
 
@@ -283,22 +270,35 @@ def test_incremental_manifest_multiple_new_csv_files(spark, tmp_path):
     assert df3.count() == 2
 
 
-def test_fan_out_spec_list_is_reusable(spark, tmp_path):
-    """r4 review: fan_out popped 'kind' out of the caller's dicts, so
-    a retry (or second DataFrame) with the same spec list raised
-    KeyError."""
-    from ai_etl_framework_spark.sinks.writers import fan_out
+def test_build_pipeline_leaves_config_dicts_intact(spark, small, tmp_path):
+    """The caller's spec dicts survive a build: popping 'type' (or a
+    nested transformer config) out of them would make a retry of the
+    same config raise KeyError or silently drop parameters."""
+    import copy
 
-    df = spark.range(5).selectExpr("id", "cast(id as string) as s")
-    specs = [
-        {"kind": "parquet", "path": str(tmp_path / "p1")},
-        {"kind": "csv", "path": str(tmp_path / "c1"), "header": True},
-    ]
-    fan_out(df, specs)
-    specs[0]["path"] = str(tmp_path / "p2")
-    specs[1]["path"] = str(tmp_path / "c2")
-    fan_out(df, specs)  # must not raise
-    assert spark.read.parquet(str(tmp_path / "p2")).count() == 5
+    from ai_etl_framework_spark.pipeline.config import build_pipeline
+
+    src = str(tmp_path / "src")
+    small.write.parquet(src)
+    config = {
+        "name": "reuse",
+        "source": {"type": "parquet", "path": src},
+        "transformers": [
+            {"type": "null_remover", "config": {"strategy": "drop"}},
+            {"type": "type_converter", "casts": {"id": "string"}},
+        ],
+        "destinations": [
+            {"type": "parquet", "path": str(tmp_path / "bi")},
+            {"type": "csv", "path": str(tmp_path / "rag"), "header": True},
+        ],
+    }
+    before = copy.deepcopy(config)
+    for _ in range(2):
+        result = build_pipeline(spark, config).run()
+        assert result.success, result.errors
+        assert config == before
+    assert spark.read.parquet(str(tmp_path / "bi")).count() == result.records_loaded
+    assert spark.read.option("header", True).csv(str(tmp_path / "rag")).count() == result.records_loaded
 
 
 def test_sqlite_nested_struct_in_array_keeps_field_names(spark, tmp_path):

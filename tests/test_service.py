@@ -73,7 +73,7 @@ def test_csv_fallback_and_missing(spark, tmp_path):
     root = tmp_path / "org" / "gold" / "bi" / "src"
     root.mkdir(parents=True)
     df.coalesce(1).write.option("header", True).mode("overwrite").csv(str(root / "src.csv"))
-    svc = DashboardService(spark, str(tmp_path), cache_data=False)
+    svc = DashboardService(spark, str(tmp_path))
     assert svc.get_df("org", "src").count() == 1
     with pytest.raises(ReadError):
         svc.get_df("org", "nope")
